@@ -7,22 +7,33 @@ model.py:166-184``) on Spark:
 
 - Per-task logistic heads w_t (model.py:150-151) and the task×task
   causality matrix B with fixed zero diagonal (model.py:86-101).
-- The *data-dependent* loss/gradient is distributed: one
-  ``applyInPandas`` pass per iteration grouped by ``(task, salt)``
-  where ``salt = pmod(hash(entity_id), grad_salt)`` — each of the
-  T·grad_salt groups emits one partial row (n, Σloss, Σgrad), and the
-  driver combines the ≤ T·grad_salt tiny rows (sums are associative,
-  so numerics match the unsalted pass up to float reordering).
-  Salting matters because a plain ``groupBy(task)`` with T≈5 tasks
-  would materialize ~1/T of the *whole dataset* inside one Python
-  worker — the hot-key degenerate case ``operators/skew.py`` exists
-  for; with salting no group exceeds ~|data|/(T·grad_salt) rows.
-  Size ``grad_salt`` ≈ shuffle-partitions/T on a real cluster.
+- The *data-dependent* loss/gradient is distributed.  ``fit`` tags the
+  train rows and the held-out rows with a boolean ``__eval`` column,
+  unions them, coalesces the union to ``defaultParallelism``
+  partitions (one Python task per core) and caches it once.  Every
+  iteration is then ONE ``mapInArrow`` pass over that cache with no
+  shuffle: per Arrow batch the kernel flattens the fixed-width ``x``
+  list array straight into an [n, D] matrix, computes the CE loss and
+  gradient in numpy and accumulates (n, Σloss, Σgrad) per
+  (split, task) with ``np.add.at``.  Each partition emits ≤ 2·T tiny
+  rows and the driver adds them (associative sums, so numerics match a
+  single-node pass up to float reordering).  Nothing is grouped, so no
+  Python worker ever holds a whole task's rows and there is no hot key
+  to salt.
+- Held-out eval is fused into the training passes: the eval for check
+  iteration ``it`` uses W after update ``it``, which is exactly the W
+  training pass ``it+1`` reads, so that pass scores the eval rows too.
+  Only the last check needs an eval-only pass.
+- A pass is one Spark job, and a job's fixed cost dominates at this
+  scale (a no-op ``mapInArrow`` job costs ~0.35 s on a 4-core VM).
+  Running the whole loop as one barrier-mode job, with a
+  ``BarrierTaskContext.allGather`` per iteration, is slower:
+  spark-core 4.1.2's ``BarrierTaskContext.runBarrier`` polls with
+  ``Thread.sleep(1000)``, so every ``allGather`` costs ≥ 1.0 s.
 - The *parameter-space* AMTL terms touch only the [T×D] weight matrix
   and [T×T] B — pure numpy on the driver, exactly like the reference
   keeps them in the TF graph.
-- The iteration loop is driver-side (model.py:232's range loop); the
-  featurized input is cached once before the loop (SURVEY §4.2).
+- The iteration loop is driver-side (model.py:232's range loop).
 
 The learned B is the engine's causality output: B[i][j] = how much
 task i's knowledge transfers to task j (model.py:296-310's dump).
@@ -33,7 +44,6 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,7 +58,6 @@ class AMTLConfig:
     total_iter: int = 20
     check_iter: int = 5
     seed: int = 42
-    grad_salt: int = 8  # partial-aggregation fan-out per task
     # rows per task per iteration (the reference's get_batch minibatch
     # protocol, model.py:187-214); None = full-batch gradients
     batch_size: int | None = None
@@ -72,60 +81,81 @@ class AMTLTrainer:
     # ---- distributed piece -------------------------------------------------
 
     @staticmethod
-    def _partial_grad_fn(W_rows: dict[str, list[float]]):
-        """Grouped-map kernel: per task, sigmoid-CE loss sum + gradient
-        sum for the current broadcast weights (model.py:159 math)."""
+    def _partials_fn(W: np.ndarray, tasks: list[str]):
+        """mapInArrow kernel: per (split, task), the row count, the
+        sigmoid-CE loss sum and the gradient sum for the broadcast
+        weights (model.py:159 math).  Each partition yields at most
+        2·T rows; rows of tasks the trainer does not know are skipped."""
+        T, D = W.shape
 
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            task = pdf["task"].iloc[0]
-            w = np.asarray(W_rows[task], dtype=np.float64)
-            X = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf["x"]])
-            X = np.hstack([X, np.ones((len(X), 1))])  # bias column
-            y = pdf["y"].to_numpy(dtype=np.float64)
-            z = X @ w
-            # stable CE: max(z,0) - z*y + log1p(exp(-|z|))  (model.py:159)
-            loss = np.maximum(z, 0) - z * y + np.log1p(np.exp(-np.abs(z)))
-            p = 1.0 / (1.0 + np.exp(-z))
-            grad = X.T @ (p - y)
-            return pd.DataFrame(
-                {
-                    "task": [task],
-                    "n": [float(len(X))],
-                    "loss_sum": [float(loss.sum())],
-                    "grad": [grad.tolist()],
-                }
-            )
+        def fn(batches):
+            import pyarrow as pa
+            import pyarrow.compute as pc
+
+            names = pa.array(tasks, pa.string())
+            # per key eval·T + task: [n, Σloss, Σgrad_0 .. Σgrad_{D-1}]
+            acc = np.zeros((2 * T, D + 2))
+            for b in batches:
+                ev = b.column("__eval").to_numpy(zero_copy_only=False)
+                ti = pc.index_in(b.column("task"), value_set=names).fill_null(-1).to_numpy()
+                keep = ti >= 0
+                if not keep.any():
+                    continue
+                # fixed-width list<double> → [n, D-1] without a per-row copy
+                X = b.column("x").flatten().to_numpy(zero_copy_only=False)
+                X = X.reshape(b.num_rows, D - 1)[keep]
+                X = np.hstack([X, np.ones((len(X), 1))])  # bias column
+                y = b.column("y").to_numpy(zero_copy_only=False)[keep]
+                ti = ti[keep]
+                z = np.einsum("ij,ij->i", X, W[ti])
+                # stable CE: max(z,0) - z*y + log1p(exp(-|z|))  (model.py:159)
+                loss = np.maximum(z, 0) - z * y + np.log1p(np.exp(-np.abs(z)))
+                r = 1.0 / (1.0 + np.exp(-z)) - y
+                rows = np.column_stack([np.ones(len(z)), loss, X * r[:, None]])
+                np.add.at(acc, ev[keep] * T + ti, rows)
+            keys = np.flatnonzero(acc[:, 0])
+            if len(keys):
+                offsets = pa.array(np.arange(len(keys) + 1, dtype=np.int32) * D)
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(keys >= T),
+                        pa.array((keys % T).astype(np.int32)),
+                        pa.array(acc[keys, 0]),
+                        pa.array(acc[keys, 1]),
+                        pa.ListArray.from_arrays(offsets, pa.array(acc[keys, 2:].ravel())),
+                    ],
+                    names=["is_eval", "task", "n", "loss_sum", "grad"],
+                )
 
         return fn
 
-    def _partials_df(self, feats: DataFrame) -> DataFrame:
-        """The per-iteration distributed pipeline as a DataFrame —
-        exposed separately so ``tests/test_plans.py`` can gate its
-        physical plan (cached scan + exactly one Exchange on the
-        salted group key) against the REAL trainer code path."""
-        fn = self._partial_grad_fn({t: self.W[i].tolist() for i, t in enumerate(self.tasks)})
-        salted = feats.withColumn(
-            "__salt", F.pmod(F.hash("entity_id"), F.lit(self.config.grad_salt))
-        )
-        return salted.groupBy("task", "__salt").applyInPandas(
-            fn, schema="task string, n double, loss_sum double, grad array<double>"
+    def _pass_df(self, data: DataFrame, train: bool, evaluate: bool) -> DataFrame:
+        """One pass over the ``train`` and/or ``evaluate`` rows of
+        ``(task, x, y, __eval)`` as a DataFrame — exposed separately so
+        ``tests/test_plans.py`` can gate its physical plan (cached
+        scan, MapInArrow, no Exchange) against the REAL trainer code
+        path."""
+        if not (train and evaluate):
+            data = data.where(F.col("__eval") if evaluate else ~F.col("__eval"))
+        fn = self._partials_fn(self.W.copy(), list(self.tasks))
+        return data.select("task", "x", "y", "__eval").mapInArrow(
+            fn, "is_eval boolean, task int, n double, loss_sum double, grad array<double>"
         )
 
-    def _distributed_partials(self, feats: DataFrame) -> dict[str, tuple[float, float, np.ndarray]]:
-        """Salted two-stage partial aggregation: groups are
-        ``(task, salt)`` so no single Python worker ever receives a
-        whole task's rows; the T·grad_salt partial rows are combined
-        here (associative sums — numerics equal the unsalted pass)."""
-        rows = self._partials_df(feats).collect()
-        out: dict[str, tuple[float, float, np.ndarray]] = {}
-        for r in rows:
-            g = np.asarray(r["grad"])
-            if r["task"] in out:
-                n0, l0, g0 = out[r["task"]]
-                out[r["task"]] = (n0 + r["n"], l0 + r["loss_sum"], g0 + g)
-            else:
-                out[r["task"]] = (r["n"], r["loss_sum"], g)
-        return out
+    def _run_pass(
+        self, data: DataFrame, train: bool, evaluate: bool
+    ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """Run one pass and add up its partial rows: ``(n, Σloss,
+        Σgrad)`` shaped [2, T], [2, T], [2, T, D], split 0 = train,
+        1 = eval."""
+        T, D = self.W.shape
+        n, loss, grad = np.zeros((2, T)), np.zeros((2, T)), np.zeros((2, T, D))
+        for r in self._pass_df(data, train, evaluate).collect():
+            s, t = int(r["is_eval"]), r["task"]
+            n[s, t] += r["n"]
+            loss[s, t] += r["loss_sum"]
+            grad[s, t] += r["grad"]
+        return n, loss, grad
 
     # ---- driver-side AMTL math ---------------------------------------------
 
@@ -162,40 +192,64 @@ class AMTLTrainer:
         total = float((scale * loss_mean).sum() + lambda_ * (resid**2).sum())
         return grad_W, grad_B, total
 
-    def _minibatch(self, feats: DataFrame, it: int) -> DataFrame:
-        """Per-iteration random minibatch of ``batch_size`` rows per
-        task — the reference's ``get_batch`` sampling (model.py:
+    def _minibatch(self, data: DataFrame, it: int) -> DataFrame:
+        """Per-iteration random minibatch of ``batch_size`` train rows
+        per task — the reference's ``get_batch`` sampling (model.py:
         187-214), made deterministic: seeded ``rand(seed + it)`` as
         the shuffle key, entity_id tie-break, ranking window per
-        task.  One extra shuffle per iteration, traded against a
-        gradient pass over ``batch_size·T`` rows instead of the full
-        dataset — the standard SGD economics at 100 TB."""
+        ``(__eval, task)``.  Every eval row is kept, so the fused eval
+        still sees the whole held-out split.  One extra shuffle per
+        iteration, traded against a gradient pass over
+        ``batch_size·T`` rows instead of the full dataset — the
+        standard SGD economics at 100 TB."""
         from pyspark.sql import Window
 
-        w = Window.partitionBy("task").orderBy("__r", "entity_id")
+        w = Window.partitionBy("__eval", "task").orderBy("__r", "entity_id")
         return (
-            feats.withColumn("__r", F.rand(self.config.seed + it))
+            data.withColumn("__r", F.rand(self.config.seed + it))
             .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= self.config.batch_size)
+            .filter(F.col("__eval") | (F.col("__rn") <= self.config.batch_size))
             .drop("__r", "__rn")
         )
+
+    def _mean_losses(self, n: np.ndarray, loss_sum: np.ndarray) -> dict[str, float]:
+        return {t: loss_sum[i] / n[i] for i, t in enumerate(self.tasks) if n[i]}
 
     def _eval_losses(self, eval_feats: DataFrame) -> dict[str, float]:
         """Mean eval CE per task with the current weights (the
         reference's keep_prob=1.0 eval pass, model.py:236-246)."""
-        partials = self._distributed_partials(eval_feats)
-        return {t: partials[t][1] / partials[t][0] for t in self.tasks if t in partials}
+        n, loss, _ = self._run_pass(
+            eval_feats.withColumn("__eval", F.lit(True)), train=False, evaluate=True
+        )
+        return self._mean_losses(n[1], loss[1])
+
+    def _record_eval(self, n: np.ndarray, loss_sum: np.ndarray, it: int) -> None:
+        ev = self._mean_losses(n, loss_sum)
+        self.config.eval_history.append(ev)
+        for t, l in ev.items():  # min + argmin iter (model.py:248-262)
+            if t not in self.eval_min or l < self.eval_min[t][0]:
+                self.eval_min[t] = (l, it)
+
+    def _fused_input(self, feats: DataFrame, eval_feats: DataFrame | None = None) -> DataFrame:
+        """Train rows (``__eval`` false) and held-out rows (true) as one
+        relation, coalesced to one partition per core and cached — the
+        input every pass of ``fit`` reads."""
+        cols = ["entity_id", "task", "x", "y"]
+        data = feats.select(*cols, F.lit(False).alias("__eval"))
+        if eval_feats is not None:
+            data = data.unionByName(eval_feats.select(*cols, F.lit(True).alias("__eval")))
+        return data.coalesce(feats.sparkSession.sparkContext.defaultParallelism).persist()
 
     def fit(self, feats: DataFrame, eval_feats: DataFrame | None = None) -> "AMTLTrainer":
         cfg = self.config
-        feats = feats.select("entity_id", "task", "x", "y")
-        feats.persist()  # cached once; the loop re-reads it every iteration
-        if eval_feats is not None:
-            eval_feats = eval_feats.select("entity_id", "task", "x", "y").persist()
-        # one job yields both the task list and the feature width
-        # (formerly a separate .first() probe — an extra Spark job per fit)
-        task_rows = (
-            feats.groupBy("task").agg(F.max(F.size("x")).alias("d")).orderBy("task").collect()
+        data = self._fused_input(feats, eval_feats)
+        # one probe yields both the task list and the feature width, and
+        # materializes the cache the passes read; the T rows are sorted
+        # here (Spark's string order is code-point order, as Python's),
+        # which spares the probe a range-partitioned sort
+        task_rows = sorted(
+            data.where(~F.col("__eval")).groupBy("task").agg(F.max(F.size("x")).alias("d")).collect(),
+            key=lambda r: r["task"],
         )
         self.tasks = [r["task"] for r in task_rows]
         T = len(self.tasks)
@@ -204,15 +258,22 @@ class AMTLTrainer:
         self.W = rng.normal(0.0, 0.01, size=(T, D))
         self.B = np.zeros((T, T))
 
+        pending = None  # check iteration whose eval rides on the next pass
         for it in range(cfg.total_iter):
-            batch = self._minibatch(feats, it) if cfg.batch_size else feats
-            partials = self._distributed_partials(batch)
-            n = np.array([partials[t][0] for t in self.tasks])
-            loss = np.array([partials[t][1] for t in self.tasks]) / n
-            grad = np.vstack([partials[t][2] for t in self.tasks]) / n[:, None]
-
+            batch = self._minibatch(data, it) if cfg.batch_size else data
+            n, loss_sum, grad_sum = self._run_pass(batch, train=True, evaluate=pending is not None)
+            if pending is not None:
+                self._record_eval(n[1], loss_sum[1], pending)
+                pending = None
+            n_train = n[0]
             grad_W, grad_B, total = self._amtl_grads(
-                self.W, self.B, n, loss, grad, cfg.mu, cfg.lambda_
+                self.W,
+                self.B,
+                n_train,
+                loss_sum[0] / n_train,
+                grad_sum[0] / n_train[:, None],
+                cfg.mu,
+                cfg.lambda_,
             )
 
             self.W -= cfg.lr * grad_W
@@ -221,15 +282,12 @@ class AMTLTrainer:
             if it % cfg.check_iter == 0 or it == cfg.total_iter - 1:
                 cfg.history.append(total)
                 if eval_feats is not None:
-                    ev = self._eval_losses(eval_feats)
-                    cfg.eval_history.append(ev)
-                    for t, l in ev.items():  # min + argmin iter (model.py:248-262)
-                        if t not in self.eval_min or l < self.eval_min[t][0]:
-                            self.eval_min[t] = (l, it)
+                    pending = it
+        if pending is not None:  # the last check has no next training pass
+            n, loss_sum, _ = self._run_pass(data, train=False, evaluate=True)
+            self._record_eval(n[1], loss_sum[1], pending)
 
-        feats.unpersist()
-        if eval_feats is not None:
-            eval_feats.unpersist()
+        data.unpersist()
         return self
 
     def eval_min_df(self, spark: SparkSession) -> DataFrame:
@@ -292,7 +350,6 @@ class AMTLTrainer:
                 "total_iter": cfg.total_iter,
                 "check_iter": cfg.check_iter,
                 "seed": cfg.seed,
-                "grad_salt": cfg.grad_salt,
                 "batch_size": cfg.batch_size,
             },
         }
@@ -307,6 +364,7 @@ class AMTLTrainer:
         import json
 
         meta = json.loads(spark.read.parquet(f"{path}/meta").first()["meta"])
+        meta["config"].pop("grad_salt", None)  # removed knob; older checkpoints carry it
         trainer = cls(AMTLConfig(**meta["config"]))
         trainer.config.history = [float(v) for v in meta.get("history", [])]
         trainer.config.eval_history = [

@@ -28,6 +28,17 @@ def synthetic_feats(spark):
     return spark.createDataFrame(rows, "entity_id long, task string, x array<double>, y double")
 
 
+def _train_partials(trainer, feats):
+    """Per-task (n, Σloss, Σgrad) of one pass over every row of
+    ``feats`` as train rows, in the input's own partitioning."""
+    from pyspark.sql import functions as F
+
+    n, loss, grad = trainer._run_pass(
+        feats.withColumn("__eval", F.lit(False)), train=True, evaluate=False
+    )
+    return {t: (n[0, i], loss[0, i], grad[0, i]) for i, t in enumerate(trainer.tasks)}
+
+
 def test_loss_decreases_and_b_structure(spark, synthetic_feats):
     cfg = AMTLConfig(total_iter=25, lr=0.5, check_iter=5)
     trainer = AMTLTrainer(cfg).fit(synthetic_feats)
@@ -39,14 +50,14 @@ def test_loss_decreases_and_b_structure(spark, synthetic_feats):
 
 
 def test_distributed_gradient_matches_numpy(spark, synthetic_feats):
-    """The applyInPandas partial-aggregation must equal a single-node
+    """The mapInArrow partial-aggregation must equal a single-node
     numpy computation of the same CE loss/gradient (model.py:159)."""
     trainer = AMTLTrainer(AMTLConfig())
     trainer.tasks = TASKS
     rng = np.random.default_rng(3)
     trainer.W = rng.normal(0.0, 0.1, size=(len(TASKS), 3))
 
-    dist = trainer._distributed_partials(synthetic_feats)
+    dist = _train_partials(trainer, synthetic_feats)
 
     pdf = synthetic_feats.toPandas()
     for ti, task in enumerate(TASKS):
@@ -119,25 +130,26 @@ def test_finite_difference_full_objective():
             np.testing.assert_allclose(grad_B[i, j], fd, rtol=1e-5, atol=1e-8)
 
 
-def test_salted_partials_match_unsalted(spark, synthetic_feats):
-    """Partial sums must be independent of the salt fan-out."""
-    t1 = AMTLTrainer(AMTLConfig(grad_salt=1))
-    t8 = AMTLTrainer(AMTLConfig(grad_salt=8))
-    for tr in (t1, t8):
-        tr.tasks = TASKS
-        rng = np.random.default_rng(3)
-        tr.W = rng.normal(0.0, 0.1, size=(len(TASKS), 3))
-    d1 = t1._distributed_partials(synthetic_feats)
-    d8 = t8._distributed_partials(synthetic_feats)
+def test_partials_independent_of_partition_layout(spark, synthetic_feats):
+    """Partial sums must not depend on how the rows are partitioned:
+    the same rows at 1 and at 4 partitions give the same counts and,
+    up to float reordering, the same loss and gradient sums."""
+    trainer = AMTLTrainer(AMTLConfig())
+    trainer.tasks = TASKS
+    trainer.W = np.random.default_rng(3).normal(0.0, 0.1, size=(len(TASKS), 3))
+    d1 = _train_partials(trainer, synthetic_feats.coalesce(1))
+    d4 = _train_partials(trainer, synthetic_feats.repartition(4))
     for task in TASKS:
-        assert d1[task][0] == d8[task][0]
-        np.testing.assert_allclose(d1[task][1], d8[task][1], rtol=1e-12)
-        np.testing.assert_allclose(d1[task][2], d8[task][2], rtol=1e-12)
+        assert d1[task][0] == d4[task][0]
+        np.testing.assert_allclose(d1[task][1], d4[task][1], rtol=1e-12)
+        np.testing.assert_allclose(d1[task][2], d4[task][2], rtol=1e-12)
 
 
 def test_trainer_save_load_roundtrip(spark, synthetic_feats, tmp_path):
     """Reloaded weights must reproduce eval losses exactly (the
     checkpoint-sink row, model.py:216-217 analog)."""
+    import json
+
     trainer = AMTLTrainer(AMTLConfig(total_iter=5, check_iter=2)).fit(
         synthetic_feats, eval_feats=synthetic_feats
     )
@@ -153,6 +165,19 @@ def test_trainer_save_load_roundtrip(spark, synthetic_feats, tmp_path):
     ev_orig = trainer._eval_losses(synthetic_feats)
     ev_back = back._eval_losses(synthetic_feats)
     assert ev_orig == ev_back
+
+    # checkpoints written while AMTLConfig still had the grad_salt knob
+    # carry it in their meta; load must drop it, not fail
+    meta = json.loads(spark.read.parquet(f"{path}/meta").first()["meta"])
+    assert "grad_salt" not in meta["config"]
+    meta["config"]["grad_salt"] = 8
+    spark.createDataFrame([(json.dumps(meta),)], "meta string").write.mode(
+        "overwrite"
+    ).parquet(f"{path}/meta")
+    legacy = AMTLTrainer.load(spark, path)
+    assert legacy.config == trainer.config
+    np.testing.assert_array_equal(legacy.W, trainer.W)
+    np.testing.assert_array_equal(legacy.B, trainer.B)
 
 
 def test_holdout_eval_min_populated_and_reproducible(spark, synthetic_feats):
@@ -172,6 +197,35 @@ def test_holdout_eval_min_populated_and_reproducible(spark, synthetic_feats):
     assert len(t1.config.eval_history) == len(t1.config.history) > 0
     edf = t1.eval_min_df(spark).toPandas()
     assert set(edf.task) == set(TASKS)
+
+
+def test_fused_eval_matches_separate_eval_pass(spark, synthetic_feats):
+    """The held-out eval rides on the NEXT training pass (and the last
+    check on an eval-only pass); each eval_history entry must be the
+    eval of W right after its check iteration's update — the same
+    number a separate eval pass gives on a trainer stopped there."""
+    from pyspark.sql import functions as F
+
+    bucket = F.pmod(F.hash("entity_id"), F.lit(5))
+    train, ev = synthetic_feats.where(bucket < 4), synthetic_feats.where(bucket >= 4)
+    full = AMTLTrainer(AMTLConfig(total_iter=6, check_iter=2)).fit(train, eval_feats=ev)
+    checks = [0, 2, 4, 5]
+    assert len(full.config.eval_history) == len(checks)
+
+    expect_min: dict[str, tuple[float, int]] = {}
+    for k, it in enumerate(checks):
+        # same train ∪ eval input, so W is bit-identical to the full
+        # fit's W after update `it`
+        stop = AMTLTrainer(AMTLConfig(total_iter=it + 1, check_iter=2)).fit(train, eval_feats=ev)
+        separate = stop._eval_losses(ev)
+        fused = full.config.eval_history[k]
+        assert set(fused) == set(separate) == set(TASKS)
+        for t in TASKS:
+            # only the summation order differs (ev's own partitions)
+            np.testing.assert_allclose(fused[t], separate[t], rtol=1e-12)
+            if t not in expect_min or fused[t] < expect_min[t][0]:
+                expect_min[t] = (fused[t], it)
+    assert full.eval_min == expect_min
 
 
 def test_b_matrix_parquet_roundtrip(spark, synthetic_feats, tmp_path):
@@ -277,9 +331,10 @@ def test_irls_agrees_with_mllib_lbfgs(spark, sf_dir):
 
 
 def test_amtl_driver_rows_bounded_per_step(spark, sf_dir, monkeypatch):
-    """ARCHITECTURE claims the driver receives <= T*grad_salt partial
-    rows per training step; spy on DataFrame.collect during a 2-step
-    fit and verify no collect exceeds the bound (VERDICT r6 #4)."""
+    """ARCHITECTURE claims the driver receives <= 2*T partial rows per
+    partition per pass (one per (split, task)), with one partition per
+    core; spy on DataFrame.collect during a 2-step fit and verify no
+    collect exceeds 2*T*defaultParallelism (VERDICT r6 #4)."""
     # patch the CONCRETE class: in Spark 4 pyspark.sql.DataFrame is a
     # facade and instances are classic.dataframe.DataFrame
     from pyspark.sql.classic.dataframe import DataFrame
@@ -305,7 +360,7 @@ def test_amtl_driver_rows_bounded_per_step(spark, sf_dir, monkeypatch):
     train, _ = _split_feats(spark, sf_dir)
     trainer = AMTLTrainer(cfg).fit(train)
     T = len(trainer.tasks)
-    bound = T * cfg.grad_salt
+    bound = 2 * T * spark.sparkContext.defaultParallelism
     assert sizes, "expected collects during fit"
     assert max(sizes) <= bound, (sizes, bound)
 

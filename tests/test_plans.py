@@ -418,11 +418,12 @@ def test_dpp_probe_prunes_partitions_at_runtime(spark, sf_dir):
     assert "dynamicpruning" in plan.lower(), plan
 
 
-def test_amtl_iteration_plan_cached_scan_single_exchange(spark, sf_dir):
+def test_amtl_iteration_plan_cached_scan_no_exchange(spark, sf_dir):
     """ARCHITECTURE's AMTL execution-shape claims, gated (VERDICT r6
-    #4): each training iteration reads the PERSISTED featurized input
-    (InMemoryTableScan — no re-featurization per step) and shuffles
-    exactly once, on the salted (task, __salt) group key."""
+    #4): each training iteration reads the PERSISTED train ∪ eval input
+    (InMemoryTableScan — no re-featurization per step) in one
+    MapInArrow pass and shuffles NOTHING: partial sums are
+    accumulated per partition, not grouped."""
     from causality_between_elements_based_on_time_series_data_spark.ml.amtl import (
         AMTLConfig,
         AMTLTrainer,
@@ -431,13 +432,13 @@ def test_amtl_iteration_plan_cached_scan_single_exchange(spark, sf_dir):
         _split_feats,
     )
 
-    train, _ = _split_feats(spark, sf_dir)
+    train, ev = _split_feats(spark, sf_dir)
     trainer = AMTLTrainer(AMTLConfig(total_iter=1, check_iter=1))
     trainer.fit(train)  # initialize tasks/W (fit unpersists when done)
-    feats = train.select("entity_id", "task", "x", "y").persist()
+    data = trainer._fused_input(train, ev)
     try:
-        feats.count()  # materialize the cache as fit's loop does
-        df = trainer._partials_df(feats)
+        data.count()  # materialize the cache as fit's task probe does
+        df = trainer._pass_df(data, train=True, evaluate=True)
         plan = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted"
@@ -446,16 +447,15 @@ def test_amtl_iteration_plan_cached_scan_single_exchange(spark, sf_dir):
         assert "InMemoryTableScan" in plan, plan
         # the cached relation's stored subtree (below InMemoryRelation)
         # repeats the featurization's exchanges; the LIVE iteration
-        # plan is everything above it and must shuffle exactly once —
-        # on the salted (task, __salt) group key
+        # plan is everything above it and must not shuffle at all
         live = plan.split("InMemoryRelation", 1)[0]
-        # the truncated text only keeps the tree section, where the
-        # operator renders as "+- Exchange (n)" (details render
-        # "(n) Exchange", which count_exchanges targets)
-        assert len(re.findall(r"[+:]- Exchange", live)) == 1, plan
+        assert "MapInArrow" in live, plan
+        # the truncated text only keeps the tree section, where an
+        # exchange renders as "+- Exchange (n)" / "+- ShuffleExchange"
+        assert "Exchange" not in live, plan
         assert "CartesianProduct" not in live
     finally:
-        feats.unpersist()
+        data.unpersist()
 
 
 def test_r7_estimator_family_plan_shapes(spark, sf_dir):
